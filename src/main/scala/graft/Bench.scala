@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
+  /** Seconds of the skew-SMJ control probe on an idle host (BASELINE.md). */
+  val ControlPin = 1.95
 
   /** Measured skew-join comparison: one key holds 90% of a 5M-row fact
     * side, the 100k-row dim side is too big to broadcast (threshold
@@ -16,76 +18,55 @@ object Bench {
     *     for engines/configs without AQE
     * All three must return the same checksum (asserted) — this measures
     * plans, not different answers. */
-  def skewSection(spark: SparkSession): Map[String, Double] = {
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val saved = keys.map(k => k -> conf.getOption(k)).toMap
-    def time(df: => DataFrame): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val checksum = df.collect().head.getLong(0)
-      ((System.nanoTime() - t0) / 1e9, checksum)
-    }
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-      val fact = spark.range(5000000L).select(
-        when(col("id") % 10 =!= 0, lit(7L)).otherwise(col("id") % 100000).as("k"),
-        (col("id") % 97).as("v"))
-      val dim = spark.range(100000L).select(col("id").as("k"), (col("id") * 3).as("dv"))
-      def agg(j: DataFrame): DataFrame =
-        j.agg(sum(col("v") * col("dv")).as("checksum"))
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val (tSkew, c1) = time(agg(fact.join(dim, "k")))
-      val (tSalt, c3) = time(agg(
-        graft.api.GraftOps.saltedJoin(fact, dim, "k", salt = 32)))
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      val (tAqe, c2) = time(agg(fact.join(dim, "k")))
+  def skewSection(spark: SparkSession): Map[String, Double] =
+    Harness.withConf(spark, skewOffPosture: _*) {
+      val (tSkew, c1) = skewedArm(spark)
+      val (fact, dim) = skewInputs(spark)
+      val (tSalt, c3) = timeChecksum(
+        graft.api.GraftOps.saltedJoin(fact, dim, "k", salt = 32))
+      val (tAqe, c2) = Harness.withConf(spark, "spark.sql.adaptive.skewJoin.enabled" -> "true")(
+        timeChecksum(fact.join(dim, "k")))
       assert(c1 == c2 && c2 == c3, s"checksum mismatch: $c1 $c2 $c3")
       Map("smj_skewed" -> tSkew, "smj_aqe_split" -> tAqe, "salted" -> tSalt)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
-  }
+
   /** One skewed-SMJ control run — the run-qualification probe alone
-    * (same data, same conf posture as skewSection's `smj_skewed`, skew
-    * split off) without the AQE/salted comparison arms. Cheap enough
-    * to rerun BETWEEN passes, so per-query load adjustment is
+    * (skewSection's `smj_skewed` arm: same data, same conf posture,
+    * skew split off) without the AQE/salted comparison arms. Cheap
+    * enough to rerun BETWEEN passes, so per-query load adjustment is
     * time-local instead of assuming the start-of-run load held for the
     * whole bench. */
-  def controlOnly(spark: SparkSession): Double = {
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val saved = keys.map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val fact = spark.range(5000000L).select(
-        when(col("id") % 10 =!= 0, lit(7L)).otherwise(col("id") % 100000).as("k"),
-        (col("id") % 97).as("v"))
-      val dim = spark.range(100000L).select(col("id").as("k"), (col("id") * 3).as("dv"))
-      val t0 = System.nanoTime()
-      fact.join(dim, "k").agg(sum(col("v") * col("dv")).as("checksum")).collect()
-      (System.nanoTime() - t0) / 1e9
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
+  def controlOnly(spark: SparkSession): Double =
+    Harness.withConf(spark, skewOffPosture: _*)(skewedArm(spark)._1)
+
+  /** Broadcast off, AQE skew split off, skew thresholds lowered so the
+    * hot partition splits at bench scale once the split is switched on. */
+  private val skewOffPosture = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8MB",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4MB",
+    "spark.sql.adaptive.skewJoin.enabled" -> "false")
+
+  /** 5M-row fact side with 90% of its rows on one key, 100k-row dim. */
+  private def skewInputs(spark: SparkSession): (DataFrame, DataFrame) =
+    (spark.range(5000000L).select(
+      when(col("id") % 10 =!= 0, lit(7L)).otherwise(col("id") % 100000).as("k"),
+      (col("id") % 97).as("v")),
+     spark.range(100000L).select(col("id").as("k"), (col("id") * 3).as("dv")))
+
+  /** Seconds and checksum of the join's Σ v·dv. */
+  private def timeChecksum(joined: DataFrame): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val checksum = joined.agg(sum(col("v") * col("dv")).as("checksum"))
+      .collect().head.getLong(0)
+    ((System.nanoTime() - t0) / 1e9, checksum)
+  }
+
+  /** The plain sort-merge join of the skew inputs under the current conf. */
+  private def skewedArm(spark: SparkSession): (Double, Long) = {
+    val (fact, dim) = skewInputs(spark)
+    timeChecksum(fact.join(dim, "k"))
   }
 
   /** Sustained streaming throughput: a high-rate source driving the
@@ -133,13 +114,9 @@ object Bench {
     // commit-overhead-bound shape the interval join showed in r12.
     // RocksDB measured at both state sizes and never inverts
     // (422-463k @32-big); stays a config away.
-    val savedAggParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val agg =
-      try measure(
-        stream.writeStream.outputMode("update").format("noop").start(),
-        "windowed_agg_rows_per_sec")
-      finally spark.conf.set("spark.sql.shuffle.partitions", savedAggParts)
+    val agg = Harness.withConf(spark, "spark.sql.shuffle.partitions" -> "8")(
+      measure(stream.writeStream.outputMode("update").format("noop").start(),
+        "windowed_agg_rows_per_sec"))
     // stream-stream interval join: two watermarked rate sources joined
     // on key within ±1 s — the stateful two-input path. State
     // partitions are sized to the STATE, not the core count (r12
@@ -155,8 +132,6 @@ object Bench {
     // is pinned at the FIRST run from the checkpoint, which is why
     // right-sizing here is the honest at-scale posture: pick stores
     // by state volume, let executors share them.
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val a = spark.readStream.format("rate")
       .option("rowsPerSecond", 100000).option("numPartitions", 4).load()
       .withWatermark("timestamp", "2 seconds")
@@ -167,25 +142,15 @@ object Bench {
       .select(col("value").as("kb"), col("timestamp").as("tb"))
     val j = a.join(b, expr(
       "ka = kb AND tb BETWEEN ta - INTERVAL 1 SECOND AND ta + INTERVAL 1 SECOND"))
-    val join =
-      try measure(
-        j.writeStream.outputMode("append").format("noop").start(),
-        "interval_join_rows_per_sec")
-      finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
+    val join = Harness.withConf(spark, "spark.sql.shuffle.partitions" -> "8")(
+      measure(j.writeStream.outputMode("append").format("noop").start(),
+        "interval_join_rows_per_sec"))
     agg ++ join
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
     // codegen-fallback sentinel (r15): a janino bailout is a silent
     // perf cliff no correctness gate sees (the Louvain loop ran
     // INTERPRETED for rounds, SOAK_r14.md §3) — count every fallback
@@ -208,11 +173,10 @@ object Bench {
     // BASELINE pin (1.95 s) qualifies the whole run. If the machine is
     // loaded (>1.5x pin) re-measure up to n=3 and keep the best, so a
     // transient spike doesn't disqualify an otherwise clean run.
-    val controlPin = 1.95
     var skew = Map.empty[String, Double]
     var controlTries = 0
     while (controlTries < 3 &&
-           (skew.isEmpty || skew("smj_skewed") / controlPin > 1.5)) {
+           (skew.isEmpty || skew("smj_skewed") / ControlPin > 1.5)) {
       controlTries += 1
       val s = try skewSection(spark) catch { case e: Throwable =>
         System.err.println(s"[bench] skew section failed: ${e.getMessage}")
@@ -222,7 +186,7 @@ object Bench {
       if (s.isEmpty) controlTries = 3 // don't loop on a hard failure
     }
     val controlRatio =
-      skew.get("smj_skewed").map(_ / controlPin).getOrElse(-1.0)
+      skew.get("smj_skewed").map(_ / ControlPin).getOrElse(-1.0)
     // two full passes, min per query: insulated from one-off JIT/GC/load
     // spikes. Memoized results (pagerank ranks, trained weights) are
     // cleared at each pass start so every pass pays the real compute;
@@ -287,20 +251,18 @@ object Bench {
           lname -> (System.nanoTime() - t0) / 1e9
         }
     def pass(): Map[String, Double] = {
-      // per-pass memo resets (SuffixArray included since r14: without
-      // it pass 2 rode pass 1's memoized suffix array and min-of-2
-      // recorded the 0.08 s READOUT as text_suffix_array's pin — the
-      // sf1 soak then read a bogus 25x "superlinearity" that was pure
-      // accounting). Every memo family pays its build in every pass
-      // (producer-charged, like pagerank/louvain); the io-family
-      // layout writes stay unreset BY CONVENTION (their pins document
-      // the pass-1 write charge). clearCache drops CacheManager state:
-      // cache()d fragments are keyed by canonicalized plan, so pass
-      // 2's identical plans would silently reuse pass 1's materialized
+      // per-pass memo release: without it pass 2 rode pass 1's
+      // memoized suffix array and min-of-2 recorded the 0.08 s READOUT
+      // as text_suffix_array's pin — the sf1 soak then read a bogus 25x
+      // "superlinearity" that was pure accounting. Every session memo
+      // pays its build in every pass (producer-charged, like
+      // pagerank/louvain); layout memos (persisted tables, io roots)
+      // are kept BY CONVENTION (their pins document the pass-1 write
+      // charge). clearCache drops CacheManager state: cache()d
+      // fragments are keyed by canonicalized plan, so pass 2's
+      // identical plans would silently reuse pass 1's materialized
       // data and under-report their cost.
-      operators.Graph.reset(); operators.Classify.reset()
-      operators.Similarity.reset(); operators.Bpe.reset()
-      operators.SuffixArray.reset(); operators.CurationQuality.reset()
+      SparkEntry.releaseMemos(spark)
       spark.catalog.clearCache()
       // BETWEEN families, release every memoized localCheckpoint block
       // (r14): memos never cross family boundaries (the SparkEntry
@@ -320,7 +282,7 @@ object Bench {
     // time alongside the raw one — a loaded run is then
     // self-interpreting instead of needing post-hoc load forensics
     def ctl(): Double =
-      try controlOnly(spark) / controlPin catch { case _: Throwable => -1.0 }
+      try controlOnly(spark) / ControlPin catch { case _: Throwable => -1.0 }
     val cStart = controlRatio
     // SPARK_GRAFT_PASSES=1: single timed pass — for scale-soak runs
     // (sf1+) where a second full pass doubles hours of wall-clock for
@@ -346,17 +308,16 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     val skewJson = skew.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // stream section runs TWICE, report each key's max: the StreamLab
-    // churn experiment (SOAK_r17.md §5) showed the first reading after
-    // a long batch sweep is depressed by state-store init, micro-batch
-    // codegen, and rate-source ramp (65-88k vs 127-128k warm on the
-    // interval join) — run 1 is the untimed warmup, the warm reading
-    // is the sustained capability the pins measure
+    // stream section runs TWICE and reports run 2, the warm run: the
+    // StreamLab churn experiment (SOAK_r17.md §5) showed the first
+    // reading after a long batch sweep is depressed by state-store
+    // init, micro-batch codegen, and rate-source ramp (65-88k vs
+    // 127-128k warm on the interval join) — run 1 is the warmup, the
+    // warm reading is the sustained capability the pins measure. Run 1
+    // stands in only for a key run 2 did not report.
     val stream = try {
       val s1 = streamSection(spark)
-      val s2 = streamSection(spark)
-      (s1.keySet ++ s2.keySet).map(k =>
-        k -> math.max(s1.getOrElse(k, -1.0), s2.getOrElse(k, -1.0))).toMap
+      s1 ++ streamSection(spark)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] stream section failed: ${e.getMessage}")
       Map.empty[String, Double] }

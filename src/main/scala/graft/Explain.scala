@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps the formatted physical plan of selected queries
   * so scan pushdown (`PushedFilters`), column pruning (`ReadSchema`),
   * join strategy, and whole-stage codegen coverage can be inspected.
@@ -15,13 +13,7 @@ object Explain {
     // spark.graft.triangleBloom=true); the rest are query names
     val (confArgs, nameArgs) = args.drop(1).toSeq.partition(_.contains("="))
     val names = if (nameArgs.nonEmpty) nameArgs else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // plan-only session: skip the LSH hot-bucket probe's eager job so
     // explain stays lazy (constructs the probe's cold outcome — the
     // plain self-join plan; see GraftOps.bucketPairs)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence harness for INTERNAL pipeline stages that the
   * registered queries checkpoint-collapse to LogicalRDD leaves before
   * their final plan forms (the embedding candidate stage, notably).
@@ -16,13 +14,7 @@ object ExplainStage {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val stages = if (args.length > 1) args.drop(1).toSeq else Seq("emb_pairs")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // plan-only: skip the hot-bucket probe's eager job (see Explain)
     spark.conf.set("spark.graft.lshProbe", "false")
     stages.foreach { s =>

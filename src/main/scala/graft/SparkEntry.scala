@@ -25,25 +25,18 @@ object SparkEntry {
   /** All implemented operators, one QueryDef per SURVEY.md §2 row. */
   def all: Seq[QueryDef] = families.flatMap(_._2)
 
-  /** Drop every memoized DataFrame AND free its executor block storage.
-    * The memo maps hold localCheckpoint-backed frames whose blocks
-    * otherwise live until the ContextCleaner notices the dropped
-    * references — across a 305-query sweep at sf1 that unbounded
-    * accumulation OOM'd an 8 g driver (SOAK_r13.md item 3). Clearing
-    * the maps FIRST means nothing can reference a freed block; the
-    * unpersist then releases deterministically instead of at GC's
-    * leisure. Called by Verify between families and SAFE in any
-    * long-lived session embedding the library: release walks only the
-    * [[graft.api.Memo]] registry of graft-created checkpoint/cache
-    * entries, so a host application's own persisted RDDs and cached
-    * tables on the same SparkContext are untouched (r14 advice: the
-    * earlier getPersistentRDDs+clearCache sweep truncated host lineage
-    * and dropped host caches). */
-  def releaseMemos(spark: SparkSession): Unit = {
-    Graph.reset(); Classify.reset(); Similarity.reset()
-    Bpe.reset(); SuffixArray.reset(); CurationQuality.reset()
-    graft.api.Memo.releaseAll(spark)
-  }
+  /** Drop every session memo AND free the executor state it holds
+    * (checkpoint blocks, cached frames, broadcasts, temp functions) —
+    * [[graft.api.Memo.releaseAll]]. Memoized blocks otherwise live
+    * until the ContextCleaner notices the dropped references; across a
+    * 305-query sweep at sf1 that unbounded accumulation OOM'd an 8 g
+    * driver (SOAK_r13.md item 3). Called between families by Verify
+    * and Bench, and SAFE in any long-lived session embedding the
+    * library: release walks only graft's own registry, so a host
+    * application's persisted RDDs and cached tables on the same
+    * SparkContext are untouched. Layout memos (persisted tables and
+    * files) are kept. */
+  def releaseMemos(spark: SparkSession): Unit = graft.api.Memo.releaseAll(spark)
 
   /** One-time persisted-layout builders for incremental entries whose
     * layout producer is the ENTRY ITSELF: (query name, layout label,

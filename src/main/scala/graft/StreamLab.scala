@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off throughput lab for the stateful streaming paths (r12 verdict
@@ -18,10 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamLab {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     def measure(q: org.apache.spark.sql.streaming.StreamingQuery,
                 label: String): Unit = try {
@@ -38,49 +34,22 @@ object StreamLab {
     } finally q.stop()
 
     def withConf(parts: Int, rocks: Boolean,
-                 changelog: Boolean = false)(body: => Unit): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      if (rocks)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+                 changelog: Boolean = false)(body: => Unit): Unit =
+      Harness.withConf(spark, Seq(
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        // changelog checkpointing: commits upload the delta instead of a
+        // full snapshot per batch — the production durable-rocksdb posture
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+          changelog.toString) ++
+        (if (rocks) Seq("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      // changelog checkpointing: commits upload the delta instead of a
-      // full snapshot per batch — the production durable-rocksdb posture
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        changelog.toString)
-      try body finally {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      }
-    }
+        else Nil): _*)(body)
 
     // durable = a REAL checkpoint dir (state snapshots/changelogs +
     // offset/commit WALs actually hit disk every batch) vs the default
-    // engine-managed temp dir the in-heap pins run with
-    // deleteOnExit only removes EMPTY directories; durable runs fill
-    // these with offset/commit WALs + state snapshots, so a recursive
-    // shutdown-hook sweep is needed or every lab run leaks its full
-    // checkpoint contents in /tmp (r15 advice)
-    val ckptDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      ckptDirs.foreach { root =>
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(root)) {
-          val walk = Files.walk(root)
-          try walk.sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        }
-      }))
-    def ckptDir(tag: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft-lab-$tag")
-      ckptDirs += d; d.toString
-    }
+    // engine-managed temp dir the in-heap pins run with; swept at exit
+    // or every lab run leaks its full checkpoint contents in /tmp
+    def ckptDir(tag: String): String = Harness.tempDir(s"graft-lab-$tag")
 
     def joinRate(label: String, parts: Int, rocks: Boolean,
                  intervalSec: Int = 1, wmSec: Int = 2,

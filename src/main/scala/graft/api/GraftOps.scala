@@ -32,7 +32,7 @@ object GraftOps {
     * edge counted ONCE — the m of the modularity formula) above which
     * the Louvain local-move loop defaults to delta iteration. The r12
     * bracket (delta 1.76x slower at the bench graph) predates the r14
-    * codegen fix and no longer reproduces: the r15 AbConf sweep
+    * codegen fix and no longer reproduces: the r15 A/B sweep
     * (n=3 per arm, control-bracketed, memos released per pass)
     * measures delta FASTER at every bench graph size — 0.62x on the
     * sf0.1 graph (18.4 vs 29.7 s), 0.92x at 2x, 0.87x at 4x, and the
@@ -43,7 +43,7 @@ object GraftOps {
     * compares the un-doubled m — the sf0.1 L1 level is m = 590,973,
     * so the r15 bench silently ran the FULL arm (its 29.74 s raw =
     * the OFF arm's clean minimum; the r15 verdict flagged exactly
-    * this). 5e5 puts every AbConf-measured size on the winning arm in
+    * this). 5e5 puts every A/B-measured size on the winning arm in
     * the m-convention the predicate actually uses; LouvainArmSpec
     * asserts the sf0.1 dispatch fires and Bench now records the arm.
     * Tiny (sub-bench, unmeasured) graphs stay on the simpler
@@ -191,22 +191,38 @@ object GraftOps {
     scoreMinhashPairs(sigs, bucketPairs(cand, id, hotThreshold, salt), id)
   }
 
-  /** The a<b pair enumeration over a bucketed candidate table
-    * (id, bj, bv) shared by the MinHash / SimHash / embedding LSH
-    * tiers. `hotThreshold` = Long.MaxValue is the plain self-join;
-    * otherwise buckets over the threshold take the salted path — probe
-    * side keyed by md5(id) % salt, build side replicated `salt` ways —
-    * so one hot bucket's quadratic enumeration spreads across `salt`
+  /** The ONE bucket self-join: the a<b pair enumeration over a
+    * bucketed candidate table (id, bj, bv, payload...) shared by the
+    * MinHash / SimHash / embedding LSH tiers. Each side projects the
+    * `payload` columns renamed with its side letter (`v` → `va`, `vb`),
+    * and `project` narrows every joined a<b row to the output columns
+    * IN-FLIGHT — for the embedding tier (r17, the ml_dbscan sf10
+    * redesign — SOAK_r17.md §2) that is the exact cosine, so the
+    * vector rides only the BANDING shuffle (tables × corpus × vector,
+    * LINEAR in the corpus) and everything pair-sized moves as
+    * (a, b, cos), ~24 B/row. Looking the vectors up after pairing
+    * instead EXCHANGED the candidate stream carrying a dims-wide
+    * vector: ~405M sf10 candidates × ~0.5 KB ≈ 220 GB of shuffle write
+    * (the ENOSPC that failed three consecutive sf10 soaks).
+    * `hotThreshold` = Long.MaxValue is the plain self-join; otherwise
+    * buckets over the threshold take the salted path — probe side
+    * keyed by md5(id) % salt, build side replicated `salt` ways — so
+    * one hot bucket's quadratic enumeration spreads across `salt`
     * reducers while cold buckets join plainly. The pair SET is
     * identical either way (hot pairs are found from their a-side salt;
-    * cross-band duplicates collapse in the distinct). The bucket-count
-    * pass is map-side combinable and rides the (bj, bv) shuffle the
-    * join needs anyway. */
+    * cross-band duplicates collapse in the distinct — the projection
+    * must be a pure function of the pair, as the cosine is). The
+    * bucket-count pass is map-side combinable and rides the (bj, bv)
+    * shuffle the join needs anyway. */
   private def bucketPairs(cand: DataFrame, id: String,
-                          hotThreshold: Long, salt: Int): DataFrame = {
-    def half(d: DataFrame, as: String) = d.select(col(id).as(as), col("bj"), col("bv"))
-    def plainJoin = half(cand, "a").join(half(cand, "b"), Seq("bj", "bv"))
-      .filter(col("a") < col("b")).select("a", "b")
+                          hotThreshold: Long, salt: Int,
+                          payload: Seq[String] = Nil,
+                          project: DataFrame => DataFrame = _.select("a", "b")): DataFrame = {
+    def side(d: DataFrame, as: String, extra: String*) =
+      d.select((col(id).as(as) +: payload.map(p => col(p).as(p + as)) ++:
+        (Seq("bj", "bv") ++ extra).map(col)): _*)
+    def pairsOf(j: DataFrame) = project(j.filter(col("a") < col("b")))
+    def plainJoin = pairsOf(side(cand, "a").join(side(cand, "b"), Seq("bj", "bv")))
     val pairs =
       if (hotThreshold == Long.MaxValue) plainJoin
       else {
@@ -224,19 +240,21 @@ object GraftOps {
         // slot; cross-band duplicates collapse in the distinct).
         // r16: AQE-skew-join-style dispatch — ONE map-side-combined
         // aggregation job answers "is any bucket actually hot?" before
-        // any salt machinery is planned. When none is (every bench SF;
-        // most corpora), the salted plan is pure overhead — its tag
-        // join recomputes the candidate scan twice and checkpoints a
-        // counts table — and the plain self-join is the identical pair
-        // set (all rows would take slot 0). The r15 always-salted
-        // plans cost the dup tier 1.5-2x of pin on TWO qualified
-        // benches while "protecting" buckets that were never hot; now
-        // the probe (a linear scan-reduce, no checkpoint, no counts
-        // readback) is the only constant cost, and the salt engages
-        // exactly when a bucket crosses the threshold (the
-        // planted-hot-bucket specs still exercise it). Hot corpora pay
-        // the bucket groupBy twice (probe + the checkpointed counts) —
-        // rare by construction, and linear both times.
+        // any salt machinery is planned (payload columns are read,
+        // never shuffled — the combine reduces to (bj, bv, n) before
+        // the exchange). When none is (every bench SF; most corpora),
+        // the salted plan is pure overhead — its tag join recomputes
+        // the candidate scan twice and checkpoints a counts table —
+        // and the plain self-join is the identical pair set (all rows
+        // would take slot 0). The r15 always-salted plans cost the dup
+        // tier 1.5-2x of pin on TWO qualified benches while
+        // "protecting" buckets that were never hot; now the probe (a
+        // linear scan-reduce, no checkpoint, no counts readback) is
+        // the only constant cost, and the salt engages exactly when a
+        // bucket crosses the threshold (the planted-hot-bucket specs
+        // still exercise it). Hot corpora pay the bucket groupBy twice
+        // (probe + the checkpointed counts) — rare by construction,
+        // and linear both times.
         // r17 (advice): the probe is an EAGER job at DataFrame-
         // construction time, which broke laziness for plan-only
         // consumers — Explain executed the full banding+groupBy just
@@ -257,84 +275,16 @@ object GraftOps {
           val counts = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
             .truncated()
           val tagged = cand.join(counts, Seq("bj", "bv"))
-          def sided(as: String) =
-            tagged.select(col(id).as(as), col("bj"), col("bv"), col("__n"))
-          val aSide = sided("a").withColumn("__s",
+          val aSide = side(tagged, "a", "__n").withColumn("__s",
             when(col("__n") <= hotThreshold, lit(0))
               .otherwise((conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
                 .cast("long") % salt).cast("int")))
             .drop("__n")
-          val bSide = sided("b").withColumn("__s",
+          val bSide = side(tagged, "b", "__n").withColumn("__s",
             explode(when(col("__n") <= hotThreshold, array(lit(0)))
               .otherwise(array((0 until salt).map(lit): _*))))
             .drop("__n")
-          aSide.join(bSide, Seq("bj", "bv", "__s"))
-            .filter(col("a") < col("b")).select("a", "b")
-        }
-      }
-    pairs.distinct()
-  }
-
-  /** CO-LOCATED cosine variant of [[bucketPairs]] for the embedding
-    * tier (r17, the ml_dbscan sf10 redesign — SOAK_r17.md §2): `cand`
-    * carries the vector column `v` alongside (id, bj, bv), both bucket
-    * self-join sides project it, and the exact cosine is computed
-    * IN-FLIGHT on the join's output stream, each pair row immediately
-    * narrowing to (a, b, cos). The alternative — pairing ids first and
-    * looking the vectors up afterwards — EXCHANGES the candidate-pair
-    * stream carrying a looked-up dims-wide vector for the second
-    * lookup: ~405M sf10 candidates × ~0.5 KB ≈ 220 GB of shuffle write
-    * (the ENOSPC that failed three consecutive sf10 soaks even after
-    * the r16 fix removed the pair-side SORT). Co-located, the vector
-    * rides only the BANDING shuffle — tables × corpus × vector, LINEAR
-    * in the corpus — and everything pair-sized moves as (a, b, cos),
-    * ~24 B/row. Pair set and values unchanged: same buckets, same
-    * a < b rule, same hot-bucket probe + salt dispatch as
-    * [[bucketPairs]], same round-6 cosine (a pure function of (a, b),
-    * so the distinct on (a, b, cos) collapses cross-band duplicates
-    * exactly as the distinct on (a, b) did). */
-  private def bucketCosinePairs(cand: DataFrame, id: String,
-                                hotThreshold: Long, salt: Int): DataFrame = {
-    def half(d: DataFrame, as: String, vas: String) =
-      d.select(col(id).as(as), col("v").as(vas), col("bj"), col("bv"))
-    def scored(j: DataFrame) = j
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(expr("cosine_sim(va, vb)"), 6).as("cos"))
-    def plainJoin =
-      scored(half(cand, "a", "va").join(half(cand, "b", "vb"), Seq("bj", "bv")))
-    val pairs =
-      if (hotThreshold == Long.MaxValue) plainJoin
-      else {
-        // identical dispatch to bucketPairs: one map-side-combined probe
-        // job (vectors are read, never shuffled — the combine reduces to
-        // (bj, bv, n) before the exchange); plain join when no bucket is
-        // hot, salt-slotted join when one is
-        val probeOn = cand.sparkSession.conf
-          .getOption("spark.graft.lshProbe").forall(_ != "false")
-        val maxBucket =
-          if (!probeOn) 0L
-          else cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .agg(coalesce(max(col("__n")), lit(0L)))
-            .head.getLong(0)
-        if (maxBucket <= hotThreshold) plainJoin
-        else {
-          val counts = cand.groupBy("bj", "bv").agg(count(lit(1)).as("__n"))
-            .truncated()
-          val tagged = cand.join(counts, Seq("bj", "bv"))
-          def sided(as: String, vas: String) =
-            tagged.select(col(id).as(as), col("v").as(vas),
-              col("bj"), col("bv"), col("__n"))
-          val aSide = sided("a", "va").withColumn("__s",
-            when(col("__n") <= hotThreshold, lit(0))
-              .otherwise((conv(substring(md5(col("a").cast("string")), 1, 8), 16, 10)
-                .cast("long") % salt).cast("int")))
-            .drop("__n")
-          val bSide = sided("b", "vb").withColumn("__s",
-            explode(when(col("__n") <= hotThreshold, array(lit(0)))
-              .otherwise(array((0 until salt).map(lit): _*))))
-            .drop("__n")
-          scored(aSide.join(bSide, Seq("bj", "bv", "__s")))
+          pairsOf(aSide.join(bSide, Seq("bj", "bv", "__s")))
         }
       }
     pairs.distinct()
@@ -542,7 +492,7 @@ object GraftOps {
     // never transport vectors: here the banded table carries
     // (id, v, b0..bT) — ONE materialization, tables × corpus × vector
     // shuffle, LINEAR in the corpus — each table leg projects
-    // (id, v, bj, bv), and bucketCosinePairs computes the exact
+    // (id, v, bj, bv), and the bucket self-join computes the exact
     // cosine in the join's output stream, narrowing every pair row to
     // (a, b, cos) before anything pair-sized moves. Same rows, same
     // oracle.
@@ -555,7 +505,8 @@ object GraftOps {
     val cand = (0 until tables).map(t =>
       banded.select(col(id), col("v"), lit(t).as("bj"), col(s"b$t").as("bv")))
       .reduce(_ unionAll _)
-    bucketCosinePairs(cand, id, hotThreshold, salt)
+    bucketPairs(cand, id, hotThreshold, salt, payload = Seq("v"),
+      project = _.select(col("a"), col("b"), round(expr("cosine_sim(va, vb)"), 6).as("cos")))
   }
 
   /** Winnowing document fingerprints (the MOSS sketch — Schleimer,
@@ -1806,15 +1757,22 @@ object GraftOps {
     * raising the cap). spark.graft.triangleBloom=true/false overrides
     * both ways. The filter ships by broadcast (once per executor, not
     * per task) and the probe is a native codegen predicate
-    * (functions/BloomProbe.scala). Returns the registered probe
-    * function name, or None for the plain plan. */
+    * (functions/BloomProbe.scala); both the broadcast and the probe
+    * function register with [[Memo]], so releaseAll frees them.
+    * Returns the registered probe function name, or None for the
+    * plain plan. Edge-count bounds accept 2e6-style values; anything
+    * negative, fractional or non-numeric fails naming the key. */
   private val triBloomIds = new java.util.concurrent.atomic.AtomicLong(0)
   private def wedgeBloomProbe(or: DataFrame): Option[String] = {
     val spark = or.sparkSession
     val mode = spark.conf.getOption("spark.graft.triangleBloom")
     if (mode.contains("false")) return None
-    def confLong(k: String, d: Long) =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
+    def confLong(k: String, d: Long): Long = spark.conf.getOption(k).fold(d) { v =>
+      val n = scala.util.Try(BigDecimal(v.trim)).toOption
+      require(n.exists(x => x >= 0 && x.isWhole && x.isValidLong),
+        s"$k must be a non-negative whole edge count such as 2e6, got '$v'")
+      n.get.toLongExact
+    }
     val minEdges = confLong("spark.graft.triangleBloomMinEdges", 2000000L)
     val maxEdges = confLong("spark.graft.triangleBloomMaxEdges", 200000000L)
     val nEdges = or.count() // `or` is checkpointed — a cheap scan
@@ -1824,8 +1782,8 @@ object GraftOps {
     else {
       val bf = or.select(xxhash64(col("src"), col("dst")).as("h"))
         .stat.bloomFilter("h", math.max(nEdges, 1000L), 0.03)
-      val bc = spark.sparkContext.broadcast(bf)
-      val name = s"graft_tri_bloom_${triBloomIds.incrementAndGet()}"
+      val bc = Memo.registerBroadcast(spark.sparkContext.broadcast(bf))
+      val name = Memo.registerFunction(spark, s"graft_tri_bloom_${triBloomIds.incrementAndGet()}")
       graft.functions.BloomProbe.register(spark, name, bc)
       Some(name)
     }

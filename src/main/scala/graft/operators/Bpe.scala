@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
 import graft.sources.Tables
 import graft.api.GraftOps.TruncateOps
+import graft.api.Memo
 
 /** BPE tokenizer TRAINING and application (Sennrich et al. 2016) — the
   * tokenizer-construction step of a training-data pipeline, run where
@@ -29,9 +30,6 @@ object Bpe {
   val BpeMerges = 16
   val Eow = "</w>"
 
-  private val memo = scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]()
-  def reset(): Unit = memo.clear()
-
   private def dict(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -41,7 +39,7 @@ object Bpe {
   /** (merges, finalSymbols) memoized per (session, dir): train and
     * apply share one training run, like the PageRank/kmeans memos. */
   def trained(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir,
+    Memo.session("Bpe", "merges", spark, dir)(
       trainOn(dict(spark, dir), BpeMerges))
 
   /** Training core over any (w, freq) dictionary — spec entry point.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
+import graft.api.Memo
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 import graft.functions.TextFns
@@ -60,22 +61,18 @@ object CurationQuality {
     * standalone entry, pipelines v1–v5/v7 and the dataset card), the
     * 20-GD-round learned gate (qualityClassifier: recomputed whole by
     * cur_pipeline_v6), and the v2–v5 shared decontamination / +
-    * repetition id sets. Memoized per (app, dir), cleared per bench
-    * pass and between Verify families; the FIRST entry in declaration
-    * order pays the build (cur_quality_classifier for the gate memos,
+    * repetition id sets. Session memos (graft.api.Memo), released
+    * between families; the FIRST entry in declaration order pays the
+    * build (cur_quality_classifier for the gate memos,
     * cur_pipeline_v2/v3 for the id sets). Results are bit-identical:
     * every consumer joins the same relation it previously rebuilt
     * inline (guide §1.2 step 1 — don't compute things twice). */
-  private val memo = scala.collection.concurrent.TrieMap[String, DataFrame]()
-  def reset(): Unit = memo.clear()
-  private def mkey(spark: SparkSession, dir: String, tag: String): String =
-    spark.sparkContext.applicationId + ":" + dir + ":" + tag
 
   /** Hard-rule quality filter: keep + semicolon-joined fail reasons.
     * All thresholds compare ROUNDED ratios so a last-ulp float delta
     * can't flip a verdict between engines. */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(mkey(spark, dir, "qf"),
+    Memo.session("CurationQuality", "qf", spark, dir)(
       qualityFilterPlan(spark, dir).memoized())
 
   private def qualityFilterPlan(spark: SparkSession, dir: String): DataFrame =
@@ -234,7 +231,7 @@ object CurationQuality {
     * four pipelines construct identically). Producer-charged to
     * cur_pipeline_v2 (first consumer in declaration order). */
   private def cleanIds(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(mkey(spark, dir, "cleanIds"), {
+    Memo.session("CurationQuality", "cleanIds", spark, dir) {
       val qd = Tables.documents(spark, dir)
         .join(qualityFilter(spark, dir).filter(col("keep")).select("doc_id"), "doc_id")
         .select("doc_id", "text")
@@ -242,18 +239,18 @@ object CurationQuality {
           isBench = TextFns.hash32(col("doc_id").cast("string")) % 100 >= BenchPctFloor,
           w = ShingleW, threshold = ContamThreshold)
         .filter(!col("flagged")).select("doc_id").memoized()
-    })
+    }
 
   /** [[cleanIds]] minus Gopher-repetitive docs — the shared v3–v5
     * prefix. Producer-charged to cur_pipeline_v3. */
   private def calmIds(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(mkey(spark, dir, "calmIds"), {
+    Memo.session("CurationQuality", "calmIds", spark, dir) {
       val clean = Tables.documents(spark, dir)
         .join(cleanIds(spark, dir), "doc_id")
         .select(col("doc_id"), col("text"))
       Repetition.signals(clean)
         .filter(!col("repetitive")).select("doc_id").memoized()
-    })
+    }
 
   def pipeline(spark: SparkSession, dir: String): DataFrame = {
     val survivors = qualityFilter(spark, dir).filter(col("keep")).select("doc_id")
@@ -966,7 +963,7 @@ object CurationQuality {
     * which no linear bag-of-tokens score can express, but per-bucket
     * weights are a step function and can. */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(mkey(spark, dir, "qc"),
+    Memo.session("CurationQuality", "qc", spark, dir)(
       qualityClassifierPlan(spark, dir).memoized())
 
   private def qualityClassifierPlan(spark: SparkSession, dir: String): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Memo
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 import graft.functions.HashingScheme._
@@ -78,22 +79,19 @@ object Dedup {
     * re-dedup never re-shingles the corpus. Values are unchanged (the
     * stored relations are bit-identical to the in-plan ones), so all
     * three consumers keep their existing oracle. */
-  private val layoutMemo =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
   def persistedMinhashLayout(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (st, ct) = layoutMemo.getOrElseUpdate(
-      spark.sparkContext.applicationId + ":" + dir, {
-        val k = ScaleOps.dirKey(dir)
-        val (sigsT, candT) = (s"graft_mh_sigs_b$k", s"graft_mh_cand_b$k")
-        ScaleOps.dropStale(spark, sigsT); ScaleOps.dropStale(spark, candT)
-        Tables.writeBucketed(
-          graft.api.GraftOps.minhashSignatures(docs(spark, dir), "doc_id", "text"),
-          sigsT, Seq("doc_id"), ScaleOps.NBuckets)
-        Tables.writeBucketed(
-          graft.api.GraftOps.bandCandidates(spark.table(sigsT), "doc_id"),
-          candT, Seq("bj", "bv"), ScaleOps.NBuckets)
-        (sigsT, candT)
-      })
+    val (st, ct) = Memo.layout("Dedup", "minhash", spark, dir) {
+      val k = ScaleOps.dirKey(dir)
+      val (sigsT, candT) = (s"graft_mh_sigs_b$k", s"graft_mh_cand_b$k")
+      ScaleOps.dropStale(spark, sigsT); ScaleOps.dropStale(spark, candT)
+      Tables.writeBucketed(
+        graft.api.GraftOps.minhashSignatures(docs(spark, dir), "doc_id", "text"),
+        sigsT, Seq("doc_id"), ScaleOps.NBuckets)
+      Tables.writeBucketed(
+        graft.api.GraftOps.bandCandidates(spark.table(sigsT), "doc_id"),
+        candT, Seq("bj", "bv"), ScaleOps.NBuckets)
+      (sigsT, candT)
+    }
     (spark.table(st), spark.table(ct))
   }
 
@@ -226,7 +224,7 @@ object Dedup {
     * cap the input is a fixed 2048-vector prefix and the cost is a
     * constant. The cap is LOGGED whenever it binds. The UNCAPPED
     * fixed-bit contrast stays measurable spec-side
-    * (EmbeddingDedupSpec / AbConf) via GraftOps.embeddingNearDupPairs
+    * (EmbeddingDedupSpec / Requalify A/B) via GraftOps.embeddingNearDupPairs
     * with explicit bits — the 42×/109× lesson lives there now. */
   val FixedTierCap = 2048L
   def dedupEmbeddingFixed(spark: SparkSession, dir: String): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
+import graft.api.Memo
 import graft.api.Memo.MemoOps
 import graft.sources.Tables
 
@@ -23,13 +24,10 @@ object Similarity {
   val NumQueries = 10
   val TopK = 5
 
-  // trained spherical k-means centroids memoized per (session, dir):
-  // ml_kmeans and sim_ann_ivf_kmeans share one Lloyd training instead
-  // of re-running it (the Graph.pagerank memo pattern; Bench resets)
-  private val kmMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
-  def reset(): Unit = { kmMemo.clear(); opqMemo.clear(); pcaMemo.clear() }
+  // trained spherical k-means centroids, a session memo: ml_kmeans and
+  // sim_ann_ivf_kmeans share one Lloyd training instead of re-running it
   private def trainedCents(spark: SparkSession, dir: String): DataFrame =
-    kmMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir,
+    Memo.session("Similarity", "kmeans", spark, dir)(
       graft.api.GraftOps.kmeansCosine(
         Tables.embeddings(spark, dir), "vec_id", "embedding", KmK, KmIters)
         .memoized())
@@ -859,15 +857,14 @@ object Similarity {
     }
     r
   }
-  private val opqMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def opqRotationFn(spark: SparkSession, dir: String): String =
-    opqMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.session("Similarity", "opq", spark, dir) {
       val r = learnOpqRotation(spark, dir)
       val name = "graft_opq_rotate_" + java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       graft.functions.MatVec.registerRotation(spark, name, r)
       name
-    })
+    }
 
   private[graft] def learnOpqRotation(spark: SparkSession, dir: String): Array[Array[Double]] = {
     graft.functions.VectorExpressions.register(spark)
@@ -999,17 +996,16 @@ object Similarity {
     * certifies ≥0.99 cosine to the long-run eigenvector and the
     * Rayleigh quotient's monotone growth. */
   val PcaIters = 24
-  private val pcaMemo = scala.collection.concurrent.TrieMap[String, Array[Double]]()
   private[graft] def pcaComponent(spark: SparkSession, dir: String): Array[Double] = {
     graft.functions.VectorExpressions.register(spark)
-    pcaMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.session("Similarity", "pca", spark, dir) {
       val d = Ed
       val gFlat = emb(spark, dir)
         .select(expr("flatten(transform(v, a -> transform(v, b -> a * b)))").as("op"))
         .agg(expr("vec_sum(op)").as("g")).head().getSeq[Double](0).toArray
       val g = Array.tabulate(d, d)((i, j) => grid(gFlat(i * d + j), MGrid))
       powerIterate(g, PcaIters)
-    })
+    }
   }
 
   /** Fixed-round power iteration with per-step grid snap — shared with

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.sources.Tables
 import graft.api.GraftOps.TruncateOps
+import graft.api.Memo
 
 /** Distributed suffix-array construction by prefix doubling (the
   * Manber–Myers discipline in its sort-based distributed form — Flick
@@ -53,9 +54,6 @@ object SuffixArray {
     * Must divide into the 2^Rounds depth (power of two ≤ LcpCap). */
   val BaseLen = 16
 
-  private val memo = scala.collection.concurrent.TrieMap[String, DataFrame]()
-  def reset(): Unit = memo.clear()
-
   /** Order-preserving rank of the key columns — GraftOps.globalRank
     * (the distributed-sample-sort rank; see its scaladoc for the
     * materialize-before-fork correctness note). */
@@ -66,7 +64,7 @@ object SuffixArray {
     * corpus — sa_rank is the 1-based lexicographic position, ties
     * (none at this depth; spec-checked) broken by (doc_id, pos). */
   def suffixRanks(spark: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
+    Memo.session("SuffixArray", "ranks", spark, dir) {
       val chars = Tables.documents(spark, dir)
         .filter(col("doc_id") % SampleMod === 0)
         .select(col("doc_id"), col("text"), posexplode(split(col("text"), "")))
@@ -113,7 +111,7 @@ object SuffixArray {
       rankByKey(sfx, Seq("r", "doc_id", "pos"))
         .select(col("doc_id"), col("pos"), col("suf"), col("__r").as("sa_rank"))
         .truncated()
-    })
+    }
 
   def textSuffixArray(spark: SparkSession, dir: String): DataFrame =
     suffixRanks(spark, dir)

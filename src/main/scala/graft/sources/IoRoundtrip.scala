@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.QueryDef
+import graft.api.Memo
 
 /** Multi-format source/sink surface: the documents table round-trips
   * through JSON-lines, ORC and CSV sinks and is read back through the
@@ -25,19 +26,16 @@ object IoRoundtrip {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private val memo = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Drop the memoized written roots (both the format-roundtrip and
-    * schema-evolution layouts) so a timed pass pays the full
-    * write+read cost (benchmark harnesses call this between passes). */
-  def reset(): Unit = { memo.clear(); evoMemo.clear(); partMemo.clear(); snapMemo.clear() }
+  /** java.io.tmpdir/<kind>/<md5(dir) prefix>: one root per source dir. */
+  private def tmpRoot(kind: String, dir: String): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), kind, key).toString
+  }
 
   private def writtenRoot(spark: SparkSession, dir: String): String =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val root = java.nio.file.Paths
-        .get(sys.props("java.io.tmpdir"), "graft-io", key).toString
+    Memo.layout("IoRoundtrip", "root", spark, dir) {
+      val root = tmpRoot("graft-io", dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       Formats.foreach { f =>
@@ -45,7 +43,7 @@ object IoRoundtrip {
           .option("header", "true").save(s"$root/$f")
       }
       root
-    })
+    }
 
   def roundtrip(spark: SparkSession, dir: String): DataFrame = {
     val root = writtenRoot(spark, dir)
@@ -79,13 +77,9 @@ object IoRoundtrip {
     * deterministic event_id % 2. mergeSchema is the one-line fix
     * every long-lived 100 TB table eventually needs; its cost
     * (footer-merge across files) is the documented trade. */
-  private val evoMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def evolutionRoot(spark: SparkSession, dir: String): String =
-    evoMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val root = java.nio.file.Paths
-        .get(sys.props("java.io.tmpdir"), "graft-evo", key).toString
+    Memo.layout("IoRoundtrip", "evolution", spark, dir) {
+      val root = tmpRoot("graft-evo", dir)
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -95,7 +89,7 @@ object IoRoundtrip {
       ev.filter(col("event_id") % 2 === 1)
         .write.mode("overwrite").parquet(s"$root/epoch=2")
       root
-    })
+    }
 
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val root = evolutionRoot(spark, dir)
@@ -130,20 +124,16 @@ object IoRoundtrip {
     * The registered query reports per-type counts + exact cent sums
     * from the pruned read; the oracle recomputes from the raw feed. */
   val PrunedTypes: Seq[String] = Seq("click", "purchase")
-  private val partMemo = scala.collection.concurrent.TrieMap[String, String]()
   private def partitionedRoot(spark: SparkSession, dir: String): String =
-    partMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val root = java.nio.file.Paths
-        .get(sys.props("java.io.tmpdir"), "graft-part", key).toString
+    Memo.layout("IoRoundtrip", "partitioned", spark, dir) {
+      val root = tmpRoot("graft-part", dir)
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"),
           col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(root)
       root
-    })
+    }
 
   /** The pruned frame BEFORE aggregation — spec entry point for the
     * partitionFilters plan assertion. */
@@ -176,15 +166,11 @@ object IoRoundtrip {
     * stat aggregations and a |days|-row outer join — the row data of
     * unchanged partitions is read for stats only here; a real
     * lakehouse manifest already carries them in footers. */
-  private val snapMemo = scala.collection.concurrent.TrieMap[String, String]()
   val SnapCutoffDays = 15L
   val SnapLateDays = 5L
   private def snapshotRoot(spark: SparkSession, dir: String): String =
-    snapMemo.getOrElseUpdate(spark.sparkContext.applicationId + ":" + dir, {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val root = java.nio.file.Paths
-        .get(sys.props("java.io.tmpdir"), "graft-snap", key).toString
+    Memo.layout("IoRoundtrip", "snapshot", spark, dir) {
+      val root = tmpRoot("graft-snap", dir)
       val minDay = graft.operators.ScaleOps.partitionedEvents(spark, dir)._2
       Tables.events(spark, dir)
         .select(col("event_id"),
@@ -194,7 +180,7 @@ object IoRoundtrip {
           !(col("day") < minDay + SnapLateDays && col("event_id") % 2 === 1))
         .write.mode("overwrite").partitionBy("day").parquet(root)
       root
-    })
+    }
 
   def ioSnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
     val (fullPath, _) = graft.operators.ScaleOps.partitionedEvents(spark, dir)

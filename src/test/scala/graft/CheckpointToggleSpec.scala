@@ -34,14 +34,14 @@ class CheckpointToggleSpec extends SparkSpec {
     val ccLocal = GraftOps.connectedComponents(und, "s", "p", 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val (reliable, ccReliable) = withReliable {
-      graft.operators.Graph.reset() // drop the memoized local-mode ranks
+      SparkEntry.releaseMemos(spark) // drop the memoized local-mode ranks
       val pr = graft.operators.Graph.pagerank(spark, dir)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
       val cc = GraftOps.connectedComponents(und, "s", "p", 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       (pr, cc)
     }
-    graft.operators.Graph.reset() // don't leak reliably-built memos to other specs
+    SparkEntry.releaseMemos(spark) // don't leak reliably-built memos to other specs
     assert(reliable == local, "pagerank diverged under reliable checkpointing")
     assert(ccReliable == ccLocal, "CC diverged under reliable checkpointing")
   }
@@ -54,13 +54,13 @@ class CheckpointToggleSpec extends SparkSpec {
         .collect().map(_.mkString("|")).sorted.toSeq,
       graft.operators.Truss.graphKtruss(spark, dir)
         .collect().map(_.mkString("|")).sorted.toSeq)
-    graft.operators.SuffixArray.reset(); graft.operators.Bpe.reset()
+    SparkEntry.releaseMemos(spark)
     val local = snap()
     val reliable = withReliable {
-      graft.operators.SuffixArray.reset(); graft.operators.Bpe.reset()
+      SparkEntry.releaseMemos(spark)
       snap()
     }
-    graft.operators.SuffixArray.reset(); graft.operators.Bpe.reset()
+    SparkEntry.releaseMemos(spark)
     assert(reliable._1 == local._1, "suffix array diverged under reliable checkpointing")
     assert(reliable._2 == local._2, "BPE merge table diverged under reliable checkpointing")
     assert(reliable._3 == local._3, "k-truss diverged under reliable checkpointing")

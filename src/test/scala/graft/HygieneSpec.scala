@@ -96,6 +96,29 @@ class HygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("no module-level memo map outside graft.api.Memo") {
+    // every cross-query memo lives in the one registry, so
+    // SparkEntry.releaseMemos is complete by construction
+    val hits = for {
+      (p, lines) <- sources
+      if p.getFileName.toString != "Memo.scala"
+      (line, i) <- lines.zipWithIndex
+      if !isComment(line) && line.contains("TrieMap")
+    } yield s"$p:${i + 1}: ${line.trim.take(120)}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("SparkSession.builder only in graft.Harness") {
+    // one session setup for every main (cores, UTC, NTZ, UI)
+    val hits = for {
+      (p, lines) <- sources
+      if p.getFileName.toString != "Harness.scala"
+      (line, i) <- lines.zipWithIndex
+      if !isComment(line) && line.contains("SparkSession.builder")
+    } yield s"$p:${i + 1}: ${line.trim.take(120)}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("reference identifiers appear only in provenance comments") {
     // citing reference file:line for SEMANTICS in Scaladoc is required;
     // the same identifiers in CODE would smell like a renamed copy

@@ -63,10 +63,10 @@ class PageRankDanglingSpec extends SparkSpec {
         graft.operators.Graph.Iters)
       .select(col("v"), round(col("r"), 8).as("rank"))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    graft.operators.Graph.reset()
+    SparkEntry.releaseMemos(spark)
     val flagship = graft.operators.Graph.pagerank(spark, sf)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    graft.operators.Graph.reset()
+    SparkEntry.releaseMemos(spark)
     assert(general == flagship)
   }
 }

@@ -149,7 +149,7 @@ class Round11Spec extends SparkSpec {
 
   test("dedup_substring_incremental reuses the persisted base layout (no rebuild)") {
     val dir = "/root/testdata/sf0.01"
-    SuffixArray.reset()
+    SparkEntry.releaseMemos(spark)
     // build once via the full-corpus operator…
     SuffixArray.textSuffixArray(spark, dir).count()
     val built = SuffixArray.suffixRanks(spark, dir)

@@ -32,4 +32,30 @@ class TriangleBloomSpec extends SparkSpec {
     val on = withBloom("true")(rows(Graph.graphClusteringCoeff(spark, sf)))
     assert(on == off)
   }
+
+  private def withBounds[A](min: String, max: String)(body: => A): A = {
+    spark.conf.set("spark.graft.triangleBloomMinEdges", min)
+    spark.conf.set("spark.graft.triangleBloomMaxEdges", max)
+    try body finally {
+      spark.conf.unset("spark.graft.triangleBloomMinEdges")
+      spark.conf.unset("spark.graft.triangleBloomMaxEdges")
+    }
+  }
+
+  test("edge-count bounds accept the 2e6 / 2e8 form the scaladoc uses") {
+    val plain = withBloom("false")(rows(Graph.graphTriangles(spark, sf)))
+    // auto dispatch with the documented defaults spelled out: toy scale
+    // stays below 2e6, and a 0 floor engages the filter — same rows
+    assert(withBounds("2e6", "2e8")(rows(Graph.graphTriangles(spark, sf))) == plain)
+    assert(withBounds("0", "2e8")(rows(Graph.graphTriangles(spark, sf))) == plain)
+  }
+
+  test("negative, fractional or non-numeric bounds fail naming key and value") {
+    for (bad <- Seq("-1", "2.5", "2e6x")) {
+      val e = intercept[IllegalArgumentException](
+        withBounds(bad, "2e8")(Graph.graphTriangles(spark, sf).collect()))
+      assert(e.getMessage.contains("spark.graft.triangleBloomMinEdges") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }
